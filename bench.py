@@ -16,8 +16,11 @@ Two passes, both reported (VERDICT r6 #3):
 * **warm** — the same per-query protocol run a second time in the same
   JVM after ``clear_session_caches`` (cached DataFrame blocks and
   session-scoped artifacts are dropped; every query re-runs its Spark
-  jobs). Carried into the warm pass beyond JVM/JIT/page-cache state:
-  four artifact caches that outlive clear_session_caches —
+  jobs). Carried into the warm pass beyond JVM/JIT/page-cache state
+  and Spark's generated-class cache (the Janino-compiled whole-stage
+  and expression classes; ``session.get_spark`` sizes it so a warm
+  pass recompiles none of them): four artifact caches that outlive
+  clear_session_caches —
   ``retrieval._ENTRIES_CACHE`` (the collected K-row codebook entries;
   skips one small read+collect), ``retrieval._DIM_CACHE`` (embedding
   dimensionality — catalog metadata; skips a one-row probe), the

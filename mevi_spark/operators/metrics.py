@@ -179,13 +179,16 @@ def merge_eval_partials(parts: DataFrame) -> DataFrame:
 
 
 def finalize_eval_metrics(state: DataFrame) -> DataFrame:
-    """Current metrics from the maintained sums: ``sum / 1e6 / n``,
-    rounded 6 — the exact decimal-stabilized mean the oracle computes
-    with ``SUM(CAST(x AS DECIMAL(18,6))) / COUNT(*)``."""
-    n = F.col("n_queries").cast("double")
-    as_mean = lambda c: F.round(  # noqa: E731
-        F.col(c).cast("double") / F.lit(1e6) / n, 6
-    )
+    """Current metrics from the maintained sums: the mean ``S / 1e6 / n``
+    of the scaled sum ``S`` over ``n`` queries, rounded half-up at 6
+    decimals in integer arithmetic, ``(2·S + n) div (2·n) / 1e6``. The
+    oracle rounds the same integer quotient of its
+    ``SUM(CAST(x AS DECIMAL(18,6)))``; rounding a double mean instead
+    lets an exact 7th-decimal tie (S = 316150, n = 20) fall either way
+    depending on the division order."""
+    as_mean = lambda c: F.expr(  # noqa: E731
+        f"(2 * {c} + n_queries) div (2 * n_queries)"
+    ) / F.lit(1e6)
     return state.select(
         "k",
         as_mean("recall_s").alias("recall"),

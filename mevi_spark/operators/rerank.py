@@ -79,9 +79,15 @@ def coarse_to_fine(
     # alone satisfies BOTH the (query_id, doc_id) aggregation's
     # clustering requirement (a subset partitioning colocates every
     # group) and the top-k window's — the default groupBy shape paid a
-    # (query_id, doc_id) exchange of every candidate row AND a second
+    # (query_id, doc_id) exchange for the aggregation AND a second
     # query_id exchange for the window. Bit-identical results: max is
     # order-independent and the window tie-breaks on doc_id.
+    # The cost: the explicit repartition gives up the map-side partial
+    # aggregation, so every candidate row (duplicates included) is
+    # shuffled, and the aggregation's parallelism is capped at the
+    # number of distinct queries. Re-measure this shape when docs are
+    # reachable through many predicted clusters (heavy cross-cluster
+    # duplication) or when a few hot queries carry most candidates.
     scored = scored.repartition(query_id).groupBy(query_id, doc_id).agg(
         F.max("score").alias("score")
     )

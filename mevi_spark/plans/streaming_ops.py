@@ -597,6 +597,17 @@ def streaming_bm25_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _sql_mean6(x: str) -> str:
+    """The mean of ``x`` at 6 decimals, rounded half-up in integer
+    arithmetic on the scaled decimal sum ``S`` over ``n`` rows:
+    ``(2·S + n) // (2·n) / 1e6``, the quantity
+    ``finalize_eval_metrics`` rounds. ``ROUND(double(S) / n, 6)`` took
+    the exact tie 0.0158075 through 0.01580749999… and rounded it
+    down."""
+    s = f"CAST(SUM(CAST({x} AS DECIMAL(18,6))) * 1000000 AS BIGINT)"
+    return f"(2 * {s} + COUNT(*)) // (2 * COUNT(*)) / 1e6"
+
+
 def _eval_metrics_oracle() -> str:
     """``retrieval_eval_metrics``'s CTE chain with the means
     decimal-stabilized (the maintained state sums scaled longs, so the
@@ -619,9 +630,9 @@ perqk AS (SELECT k, query_id,
                  CASE WHEN min_rnk <= k THEN 1.0 ELSE 0.0 END AS q_hit
           FROM perq, ks)
 SELECT k,
-       ROUND(CAST(SUM(CAST(q_recall AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*), 6) AS recall,
-       ROUND(CAST(SUM(CAST(q_mrr AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*), 6) AS mrr,
-       ROUND(CAST(SUM(CAST(q_hit AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*), 6) AS hitrate,
+       {_sql_mean6("q_recall")} AS recall,
+       {_sql_mean6("q_mrr")} AS mrr,
+       {_sql_mean6("q_hit")} AS hitrate,
        COUNT(*) AS n_queries
 FROM perqk GROUP BY k
 """

@@ -75,6 +75,14 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("MEVI_SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Generated-class cache (static, per JVM, LRU). At the default
+        # 100 entries it never hits: one pass over the six retrieval
+        # headliners cycles through ~155 whole-stage and expression
+        # classes (~320 distinct over a session of the 13 bench.py
+        # headliners), so every warm pass recompiled all of them with
+        # Janino. 1024 is ~3x that working set; warm passes then
+        # compile none.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

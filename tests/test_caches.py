@@ -93,3 +93,39 @@ def test_dpp_conf_key_works_on_default_confs(spark):
             pass
     key = R._dpp_conf_key(fresh)
     assert len(key) == 3 and all(v for v in key)
+
+
+RETRIEVAL_HEADLINERS = (
+    "knn_topk_ip",
+    "retrieval_eval_metrics",
+    "rq_encode_two_level",
+    "rq_beam_search",
+    "coarse_to_fine_retrieval",
+    "ensemble_fuse",
+)
+
+
+def test_warm_round_compiles_no_generated_classes(spark, sf_dir):
+    """A warm round of the retrieval headliners reuses every generated
+    class: Spark's codegen cache (per JVM, LRU) is sized above the
+    classes one round cycles through, so after ``clear_session_caches``
+    the same plans find their whole-stage and expression classes still
+    resident. At Spark's default of 100 entries the round evicts its
+    own classes before reaching them again and recompiles ~156."""
+    from mevi_spark.plans import registry
+
+    qs = registry.get_queries()
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+
+    def one_round():
+        for name in RETRIEVAL_HEADLINERS:
+            qs[name](spark, sf_dir).collect()
+        R.clear_session_caches(spark)
+
+    one_round()
+    before = compiles.getCount()
+    one_round()
+    assert compiles.getCount() - before == 0

@@ -76,3 +76,29 @@ def test_query_missing_from_run_counts_in_denominator(spark):
     m = {r.k: r for r in evaluate_run(run, gt, cutoffs=(1,)).collect()}
     assert m[1].n_queries == 2
     assert m[1].recall == pytest.approx(0.5)
+
+
+def test_finalized_mean_rounds_exact_tie_half_up_like_oracle(spark):
+    """The maintained eval state and its DuckDB oracle round the same
+    exact quantity: S = 316150 micro-units over n = 20 queries is the
+    tie 0.0158075, which both sides take up to 0.015808. A double mean
+    (``ROUND(316150 / 1e6 / 20, 6)`` in DuckDB) lands on
+    0.01580749999… and gives 0.015807."""
+    import duckdb
+
+    from mevi_spark.operators.metrics import finalize_eval_metrics
+    from mevi_spark.plans.streaming_ops import _sql_mean6
+
+    state = spark.createDataFrame(
+        [(1, 316150, 316150, 316150, 20)],
+        "k int, recall_s long, mrr_s long, hit_s long, n_queries long",
+    )
+    row = finalize_eval_metrics(state).collect()[0]
+    assert (row.recall, row.mrr, row.hitrate) == (0.015808,) * 3
+
+    # 19 × 0.015807 + 0.015817 = 0.316150: the same S and n in SQL
+    oracle = duckdb.sql(
+        f"SELECT {_sql_mean6('x')} FROM (SELECT CASE WHEN i < 19 "
+        f"THEN 0.015807 ELSE 0.015817 END AS x FROM range(20) t(i))"
+    ).fetchone()[0]
+    assert oracle == 0.015808

@@ -1,10 +1,11 @@
 """Exchange-count regression gate (VERDICT r8 next-round #6): the hot
 queries' shuffle counts are pinned in ``tools/plan_baseline.json`` and
 an unexplained increase fails here, the same way DPP and broadcast
-shapes are already pinned. The FULL registry is checked by
-``python tools/plan_audit.py --check`` (this subset keeps the pytest
-fast: bench queries + the r9-new plans, none of which execute drains
-at construction)."""
+shapes are already pinned; so does a pin above the fresh count, which
+would let a regression that re-adds the saved shuffle pass. The FULL
+registry is checked by ``python tools/plan_audit.py --check`` (this
+subset keeps the pytest fast: bench queries + the r9-new plans, none of
+which execute drains at construction)."""
 
 from __future__ import annotations
 
@@ -45,16 +46,6 @@ SUBSET = [
 def test_exchange_counts_match_baseline(spark, sf_dir):
     import plan_audit
 
-    # The baseline pins the FRESH-BUILD plan of each query. Under the
-    # shared session, earlier tests leave persisted frames in the
-    # CacheManager; Catalyst then substitutes those cached relations
-    # into new builds, and the substituted InMemoryRelation's *stored
-    # child plan text* still shows its own upstream exchanges — nodes
-    # that never re-execute (the relation is materialized) but that
-    # the regex count sees, inflating e.g. dedup_minhash_pairs 5 → 9
-    # purely by test order. Clear the cache so the audited plan is the
-    # same fresh-build plan `tools/plan_audit.py` pins standalone.
-    spark.catalog.clearCache()
     report = [
         e
         for e in plan_audit.audit(spark, sf_dir, filters=tuple(SUBSET))
@@ -65,5 +56,5 @@ def test_exchange_counts_match_baseline(spark, sf_dir):
     }.symmetric_difference(SUBSET)
     assert not plan_audit.flagged(report)
     baseline = plan_audit.load_baseline()
-    violations, _improvements = plan_audit.check_exchanges(report, baseline)
+    violations = plan_audit.check_exchanges(report, baseline)
     assert not violations, violations

@@ -15,8 +15,9 @@ inspects the physical plan for:
   (VERDICT r8 next-round #6): ``--check`` fails on any INCREASE over
   the committed count (a silent extra shuffle is exactly the
   regression class the DPP/broadcast shape pins already catch for
-  their queries), and on queries missing from the baseline. Decreases
-  are improvements — reported, and ``--update`` re-pins them;
+  their queries), on queries missing from the baseline, and on pins
+  ABOVE the fresh count (a stale pin leaves room for a regression that
+  re-adds the saved shuffle to pass) — ``--update`` re-pins them;
 * whole-stage codegen presence — informational.
 
 Usage::
@@ -26,7 +27,7 @@ Usage::
     python tools/plan_audit.py --update [sf_dir]    # re-pin plan_baseline.json
 
 Exit code 1 if any UNsanctioned unbounded join appears (any mode), or
-in ``--check`` mode on any exchange-count increase / unpinned query.
+in ``--check`` mode on any exchange-count mismatch / unpinned query.
 """
 
 from __future__ import annotations
@@ -68,12 +69,19 @@ def audit(spark, sf_dir: str, filters: tuple[str, ...] = ()) -> list[dict]:
     """Build every (filtered) registered query's plan and report the
     join-shape / exchange-count / codegen facts."""
     from mevi_spark.plans import registry
+    from mevi_spark.plans.retrieval import clear_session_caches
 
     qs = registry.get_queries()
     report = []
     for name, fn in qs.items():
         if filters and not any(f in name for f in filters):
             continue
+        # the pins are fresh-build plans: a frame an earlier query left
+        # persisted would be substituted as an InMemoryRelation whose
+        # stored child plan still shows its upstream exchanges
+        # (dedup_minhash_pairs 5 -> 9 after a full sweep)
+        clear_session_caches(spark)
+        spark.catalog.clearCache()
         try:
             df = fn(spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
@@ -111,16 +119,13 @@ def load_baseline() -> dict:
         return json.load(fh)
 
 
-def check_exchanges(
-    report: list[dict], baseline: dict
-) -> tuple[list[str], list[str]]:
-    """(violations, improvements) of exchange counts vs the baseline.
-
-    A count INCREASE or an unpinned query is a violation; a decrease is
-    an improvement to re-pin with ``--update``. Queries in the baseline
-    but absent from the report (filtered runs) are ignored."""
+def check_exchanges(report: list[dict], baseline: dict) -> list[str]:
+    """Violations of exchange counts vs the baseline: a count above
+    its pin, a pin above its count (stale: re-pin so the saved shuffle
+    cannot silently come back), or an unpinned query. Queries in the
+    baseline but absent from the report (filtered runs) are ignored."""
     pinned = baseline["exchanges"]
-    violations, improvements = [], []
+    violations = []
     for e in report:
         name = e["query"]
         if "error" in e:
@@ -137,10 +142,11 @@ def check_exchanges(
                 f"plan or justify + re-pin with --update"
             )
         elif e["exchanges"] < pinned[name]:
-            improvements.append(
-                f"{name}: {e['exchanges']} < pinned {pinned[name]}"
+            violations.append(
+                f"{name}: {e['exchanges']} exchanges < pinned "
+                f"{pinned[name]} — stale pin, re-pin with --update"
             )
-    return violations, improvements
+    return violations
 
 
 def main() -> None:
@@ -187,11 +193,9 @@ def main() -> None:
                 f"alias as regressions",
                 file=sys.stderr,
             )
-        violations, improvements = check_exchanges(report, baseline)
+        violations = check_exchanges(report, baseline)
         for v in violations:
             print(f"VIOLATION {v}", file=sys.stderr)
-        for i in improvements:
-            print(f"improved  {i}", file=sys.stderr)
         bad.extend(violations)
 
     print(json.dumps(report, indent=1))
